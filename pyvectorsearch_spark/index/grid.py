@@ -48,11 +48,39 @@ def _slices(level: int, dim: int, rr: int) -> list[int]:
     return [(level * rr + dim - c - 1) // dim for c in range(dim)]
 
 
-def _slices_expr(level_col, c: int, dim: int, rr: int):
-    """Column twin of ``_slices`` for one axis — whole-stage-codegen safe."""
-    return F.floor(
-        (level_col.cast("long") * rr + dim - c - 1) / float(dim)
-    ).cast("double")
+def _d(x: float) -> str:
+    """A double as Spark SQL text. The ``D`` suffix matters: an unsuffixed
+    ``0.33`` parses as DECIMAL, which would change types and values."""
+    return f"{float(x)!r}D"
+
+
+def _slices_expr(level_sql: str, c: int, dim: int, rr: int) -> str:
+    """SQL twin of ``_slices`` for one axis over a level expression —
+    whole-stage-codegen safe. The geometry, bound and coarse-key
+    expressions below are SQL text parsed once by ``F.expr``: built from
+    per-dim Column operations, every operation is a py4j round trip
+    (thousands per search plan)."""
+    return (
+        f"CAST(FLOOR((CAST({level_sql} AS BIGINT) * {rr} + {dim} - {c} - 1)"
+        f" / {_d(dim)}) AS DOUBLE)"
+    )
+
+
+def _local_df(spark: SparkSession, cols: dict, schema: str) -> DataFrame:
+    """Driver columns -> DataFrame through a typed ``pyarrow.Table``.
+    ``createDataFrame`` over a tuple list pickles and verifies row by row,
+    and in PySpark 4.1 every later scan of it re-enters Python workers
+    (``RDD._reserialize``); a pandas frame row-converts too unless the
+    session's Arrow conf is on. An Arrow table converts in the JVM whatever
+    that conf says, so the result scans with no Python at all."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    return spark.createDataFrame(
+        pa.table(cols, schema=to_arrow_schema(struct)), struct
+    )
 
 
 def _kinstantiate_driver(
@@ -413,12 +441,20 @@ class GridIndex:
             rank=rank,
         )
 
-        mapping = spark.createDataFrame(
-            [(k, v) for k, v in assign.items()], "_fine string, cell string"
+        mapping = _local_df(
+            spark,
+            {"_fine": list(assign), "cell": list(assign.values())},
+            "_fine string, cell string",
         )
         indexed = fine.join(F.broadcast(mapping), "_fine").drop("_fine")
-        stats_df = spark.createDataFrame(
-            [(cid, lvl, list(coords), cnt) for cid, lvl, coords, cnt in stats],
+        stats_df = _local_df(
+            spark,
+            {
+                "cell": [s[0] for s in stats],
+                "level": [s[1] for s in stats],
+                "coords": [list(s[2]) for s in stats],
+                "count": [s[3] for s in stats],
+            },
             STATS_SCHEMA,
         )
         return GridIndex(
@@ -565,87 +601,50 @@ class GridIndex:
             self._stats_count = self.stats_df.count()
         return self._stats_count <= limit
 
-    def _box_bounds_expr(self, qvec: Column) -> tuple[Column, Column]:
-        """Min/max squared point-to-box distance between a query-vector
-        column and a stats row (``level``, ``coords``) as pure Catalyst
-        expressions — the distributed twin of ``_bounds`` (the pruning
-        bounds of pktree.hpp:1048-1061 and :1129-1162). Evaluates in
-        whole-stage codegen; no UDF, no driver."""
-        min_terms: list[Column] = []
-        max_terms: list[Column] = []
-        for c in range(self.dim):
-            s_c = F.floor(
-                (F.col("level").cast("long") * self.rr + self.dim - c - 1)
-                / float(self.dim)
-            ).cast("double")
-            w_c = F.lit(float(self.width)) * F.pow(F.lit(float(self.ratio)), -s_c)
-            lo = (
-                F.lit(float(self.origin[c]))
-                + F.element_at("coords", c + 1).cast("double") * w_c
-            )
-            hi = lo + w_c
-            qc = F.element_at(qvec, c + 1).cast("double")
-            dmin = F.greatest(lo - qc, F.lit(0.0)) + F.greatest(qc - hi, F.lit(0.0))
-            min_terms.append(dmin * dmin)
-            max_terms.append(
-                F.greatest((qc - lo) * (qc - lo), (hi - qc) * (hi - qc))
-            )
-        add = lambda a, b: a + b  # noqa: E731
-        import functools
-
-        return (
-            functools.reduce(add, min_terms),
-            functools.reduce(add, max_terms),
-        )
-
-    # Evaluate the CELL-ONLY geometry (per-level width = w·ratio^-floor(…),
-    # box lo/hi per dim) once per cell on the broadcast side instead of
-    # inside every |Q|·|cells| pair row (r11): the per-pair math drops from
-    # pow/floor/element_at chains to two array reads + add/mul per dim.
-    # Identical doubles — the same expressions over the same inputs, just
-    # hoisted below the BroadcastExchange. Flag kept as the A/B kill switch.
-    BOX_COLS = True
+    # Cell geometry (per-level width = w·ratio^-floor(…), box lo/hi per dim)
+    # is evaluated once per cell on the stats side — below the
+    # BroadcastExchange, or on the broadcast member table of a descent
+    # stage — never inside the |Q|·|cells| pair rows: the per-pair math is
+    # two array reads + add/mul per dim (pktree.hpp:1048-1061 likewise
+    # derives a node's box once and only compares probes against it).
 
     def _with_box_cols(self, stats_df: DataFrame) -> DataFrame:
         """stats rows + (_blo, _bhi) per-dim box-bound arrays."""
         los, his = [], []
         for c in range(self.dim):
-            s_c = F.floor(
-                (F.col("level").cast("long") * self.rr + self.dim - c - 1)
-                / float(self.dim)
-            ).cast("double")
-            w_c = F.lit(float(self.width)) * F.pow(F.lit(float(self.ratio)), -s_c)
+            s_c = _slices_expr("level", c, self.dim, self.rr)
+            w_c = f"{_d(self.width)} * POWER({_d(self.ratio)}, -({s_c}))"
             lo = (
-                F.lit(float(self.origin[c]))
-                + F.element_at("coords", c + 1).cast("double") * w_c
+                f"{_d(self.origin[c])}"
+                f" + CAST(element_at(coords, {c + 1}) AS DOUBLE) * ({w_c})"
             )
             los.append(lo)
-            his.append(lo + w_c)
-        return stats_df.withColumn("_blo", F.array(*los)).withColumn(
-            "_bhi", F.array(*his)
+            his.append(f"({lo}) + ({w_c})")
+        return stats_df.selectExpr(
+            "*",
+            f"array({', '.join(los)}) AS _blo",
+            f"array({', '.join(his)}) AS _bhi",
         )
 
-    def _box_bounds_from_cols(self, qvec: Column) -> tuple[Column, Column]:
-        """The `_box_bounds_expr` arithmetic over precomputed (_blo, _bhi)
-        columns — bit-identical terms, cell geometry not re-derived."""
-        import functools
-
-        min_terms: list[Column] = []
-        max_terms: list[Column] = []
+    def _box_bounds_from_cols(self, qvec: str) -> tuple[Column, Column]:
+        """Min/max squared point-to-box distance between the query-vector
+        column ``qvec`` and a row carrying (_blo, _bhi) — the distributed
+        twin of ``_bounds`` (the pruning bounds of pktree.hpp:1048-1061 and
+        :1129-1162). Per-dim terms summed as a left fold; evaluates in
+        whole-stage codegen, no UDF, no driver."""
+        min_terms: list[str] = []
+        max_terms: list[str] = []
         for c in range(self.dim):
-            lo = F.element_at("_blo", c + 1)
-            hi = F.element_at("_bhi", c + 1)
-            qc = F.element_at(qvec, c + 1).cast("double")
-            dmin = F.greatest(lo - qc, F.lit(0.0)) + F.greatest(qc - hi, F.lit(0.0))
-            min_terms.append(dmin * dmin)
+            lo = f"element_at(_blo, {c + 1})"
+            hi = f"element_at(_bhi, {c + 1})"
+            qc = f"CAST(element_at({qvec}, {c + 1}) AS DOUBLE)"
+            dmin = f"greatest({lo} - {qc}, 0.0D) + greatest({qc} - {hi}, 0.0D)"
+            min_terms.append(f"(({dmin}) * ({dmin}))")
             max_terms.append(
-                F.greatest((qc - lo) * (qc - lo), (hi - qc) * (hi - qc))
+                f"greatest(({qc} - {lo}) * ({qc} - {lo}),"
+                f" ({hi} - {qc}) * ({hi} - {qc}))"
             )
-        add = lambda a, b: a + b  # noqa: E731
-        return (
-            functools.reduce(add, min_terms),
-            functools.reduce(add, max_terms),
-        )
+        return F.expr(" + ".join(min_terms)), F.expr(" + ".join(max_terms))
 
     def _scored_pairs(self, qs: DataFrame, stats_df: DataFrame | None = None) -> DataFrame:
         """(query × cell) with distance bounds: queries joined against the
@@ -662,19 +661,12 @@ class GridIndex:
             qs.sparkSession.sparkContext.defaultParallelism, "_qid"
         )
         stats = stats_df if stats_df is not None else self.stats_df
-        if self.BOX_COLS:
-            mn, mx = self._box_bounds_from_cols(F.col("_qvec"))
-            return (
-                spread.crossJoin(F.broadcast(self._with_box_cols(stats)))
-                .withColumn("_min_d2", mn)
-                .withColumn("_max_d2", mx)
-                .drop("_blo", "_bhi")
-            )
-        mn, mx = self._box_bounds_expr(F.col("_qvec"))
+        mn, mx = self._box_bounds_from_cols("_qvec")
         return (
-            spread.crossJoin(F.broadcast(stats))
+            spread.crossJoin(F.broadcast(self._with_box_cols(stats)))
             .withColumn("_min_d2", mn)
             .withColumn("_max_d2", mx)
+            .drop("_blo", "_bhi")
         )
 
     # Above this many cells the |Q|x|cells| scored cross-join becomes the
@@ -881,60 +873,46 @@ class GridIndex:
         is a valid bound for all its members — the losslessness invariant
         of the two-stage descent. One cells-sized shuffle, done once per
         search plan."""
-        lvl = F.col("level").cast("int")
-        eff = F.least(lvl, F.lit(int(coarse_level)))
-        coarse_coords = F.array(
-            *[
-                F.floor(
-                    F.element_at("coords", c + 1).cast("double")
-                    / F.pow(
-                        F.lit(float(self.ratio)),
-                        _slices_expr(lvl, c, self.dim, self.rr)
-                        - _slices_expr(eff, c, self.dim, self.rr),
-                    )
-                ).cast("long")
-                for c in range(self.dim)
-            ]
+        coords = ", ".join(self._coarse_coords_sql(coarse_level))
+        cell = ", ".join(
+            ["CAST(level AS STRING)"]
+            + [f"CAST(element_at(coords, {c + 1}) AS STRING)" for c in range(self.dim)]
         )
         return (
-            self.stats_df.select(
-                eff.alias("level"),
-                coarse_coords.alias("coords"),
-                F.col("count"),
+            self.stats_df.selectExpr(
+                f"{self._coarse_level_sql(coarse_level)} AS level",
+                f"array({coords}) AS coords",
+                "count",
             )
             .groupBy("level", "coords")
             .agg(F.sum("count").cast("long").alias("count"))
-            .withColumn(
-                "cell",
-                F.concat_ws(
-                    CELL_SEP,
-                    F.col("level").cast("string"),
-                    *[
-                        F.element_at("coords", c + 1).cast("string")
-                        for c in range(self.dim)
-                    ],
-                ),
-            )
+            .withColumn("cell", F.expr(f"concat_ws('{CELL_SEP}', {cell})"))
         )
 
-    def _coarse_key_expr(self, coarse_level: int):
+    @staticmethod
+    def _coarse_level_sql(coarse_level: int) -> str:
+        """A stats row's effective level under grouping to ``coarse_level``."""
+        return f"least(CAST(level AS INT), {int(coarse_level)})"
+
+    def _coarse_coords_sql(self, coarse_level: int) -> list[str]:
+        """Per-dim ancestor coords (BIGINT) of a stats row at its effective
+        coarse level: coords // ratio^(slices(level) − slices(eff))."""
+        lvl = "CAST(level AS INT)"
+        eff = self._coarse_level_sql(coarse_level)
+        return [
+            f"CAST(FLOOR(CAST(element_at(coords, {c + 1}) AS DOUBLE) / POWER("
+            f"{_d(self.ratio)}, {_slices_expr(lvl, c, self.dim, self.rr)}"
+            f" - {_slices_expr(eff, c, self.dim, self.rr)})) AS BIGINT)"
+            for c in range(self.dim)
+        ]
+
+    def _coarse_key_expr(self, coarse_level: int) -> Column:
         """Coarse ancestor key of a fine stats row — the join key that
         expands surviving coarse cells back to their member cells."""
-        lvl = F.col("level").cast("int")
-        eff = F.least(lvl, F.lit(int(coarse_level)))
-        parts = [eff.cast("string")]
-        for c in range(self.dim):
-            parts.append(
-                F.floor(
-                    F.element_at("coords", c + 1).cast("double")
-                    / F.pow(
-                        F.lit(float(self.ratio)),
-                        _slices_expr(lvl, c, self.dim, self.rr)
-                        - _slices_expr(eff, c, self.dim, self.rr),
-                    )
-                ).cast("long").cast("string")
-            )
-        return F.concat_ws(CELL_SEP, *parts)
+        parts = [f"CAST({self._coarse_level_sql(coarse_level)} AS STRING)"] + [
+            f"CAST({x} AS STRING)" for x in self._coarse_coords_sql(coarse_level)
+        ]
+        return F.expr(f"concat_ws('{CELL_SEP}', {', '.join(parts)})")
 
     def _prune_pairs(
         self, pairs: DataFrame, k: int, broadcast_b0: bool | None = None
@@ -1031,7 +1009,7 @@ class GridIndex:
             "_qid", "cell", "count", "_min_d2", "_max_d2"
         )
         keep = self._prune_pairs(cpairs, k, broadcast_b0=b0_ok)
-        mn, mx = self._box_bounds_expr(F.col("_qvec"))
+        mn, mx = self._box_bounds_from_cols("_qvec")
         # descend: each stage expands survivors only to the NEXT ladder
         # level's grouped cells (fan-out ≤ ~DESCENT_BRANCH), finishing on
         # the true stats table — never straight from COARSE_TARGET
@@ -1042,7 +1020,9 @@ class GridIndex:
         ] + [self.stats_df]
         qs_b = F.broadcast(qs) if self._qs_broadcast_ok(qs) else qs
         for prev_lv, stats_lv in zip(ladder, stages):
-            member = stats_lv.withColumn("_ckey", self._coarse_key_expr(prev_lv))
+            member = self._with_box_cols(stats_lv).withColumn(
+                "_ckey", self._coarse_key_expr(prev_lv)
+            )
             fpairs = (
                 keep.withColumnRenamed("cell", "_ckey")
                 .join(qs_b, "_qid")
@@ -1143,13 +1123,13 @@ class GridIndex:
                 .filter(F.col("_min_d2") <= F.lit(r2))
                 .select("_qid", "cell")
             )
-            mn, _ = self._box_bounds_expr(F.col("_qvec"))
+            mn, _ = self._box_bounds_from_cols("_qvec")
             stages = [self._coarse_stats(lv) for lv in ladder[1:]] + [
                 self.stats_df
             ]
             cand = None
             for prev_lv, stats_lv in zip(ladder, stages):
-                member = stats_lv.withColumn(
+                member = self._with_box_cols(stats_lv).withColumn(
                     "_ckey", self._coarse_key_expr(prev_lv)
                 )
                 cand = (
@@ -1421,8 +1401,9 @@ class GridIndex:
         inside every query box could skip the filter (the accept-whole
         shortcut) — kept filtered for a single plan shape, correctness-
         neutral. A distributed twin would swap the numpy classification for
-        per-axis interval predicates on the broadcast stats join, exactly
-        as ``_box_bounds_expr`` does for balls.
+        per-axis interval predicates over the hoisted (_blo, _bhi) columns
+        of the broadcast stats join, as ``_box_bounds_from_cols`` does for
+        balls.
 
         Returns (query_id, neighbor_id, *payload)."""
         q_rows = queries.select(query_id, lo_col, hi_col).collect()

@@ -581,7 +581,16 @@ def _exact_group_quantiles(
             F.width_bucket("_v", "_lo", "_hi", F.lit(B)),
         ).otherwise(F.lit(1)).cast("int")
 
-    keyed = vals.join(F.broadcast(bnd_df), "_g").withColumn("_b", bucket_expr())
+    # NULL is a group of its own (as in groupBy/percentile): every join and
+    # filter on the group key below is null-safe
+    keyed = (
+        vals.join(
+            F.broadcast(bnd_df.withColumnRenamed("_g", "_bg")),
+            F.col("_g").eqNullSafe(F.col("_bg")),
+        )
+        .drop("_bg")
+        .withColumn("_b", bucket_expr())
+    )
     bc = (
         keyed.groupBy("_g", "_b").agg(F.count("*").alias("_c")).collect()
     )
@@ -621,12 +630,14 @@ def _exact_group_quantiles(
     tgt_df = spark.createDataFrame(
         targets, f"_g {g_type}, _b int, _lr long, _qi int, _w double"
     )
-    hit_pairs = sorted({(g, b) for g, b, *_ in targets})
+    hit_pairs = sorted(
+        {(g, b) for g, b, *_ in targets}, key=lambda gb: (gb[0] is not None, gb)
+    )
     # map-side prefilter: only rows of the ≤ 2·|probs| buckets per group
     # that hold a target rank ever reach the exchange
     pred = None
     for g, b in hit_pairs:
-        term = (F.col("_g") == F.lit(g)) & (F.col("_b") == F.lit(b))
+        term = F.col("_g").eqNullSafe(F.lit(g)) & (F.col("_b") == F.lit(b))
         pred = term if pred is None else (pred | term)
     hits = keyed.filter(pred)
     # distinct-value counts bound the window input by the bucket's value
@@ -639,8 +650,17 @@ def _exact_group_quantiles(
     )
     ranked = dist.withColumn("_cum", F.sum("_c").over(w))
     # a value covers bucket-local ranks (_cum − _c, _cum]
-    j = ranked.join(F.broadcast(tgt_df), ["_g", "_b"]).filter(
-        (F.col("_lr") > F.col("_cum") - F.col("_c")) & (F.col("_lr") <= F.col("_cum"))
+    tgt = F.broadcast(tgt_df.withColumnsRenamed({"_g": "_tg", "_b": "_tb"}))
+    j = (
+        ranked.join(
+            tgt,
+            F.col("_g").eqNullSafe(F.col("_tg")) & (F.col("_b") == F.col("_tb")),
+        )
+        .drop("_tg", "_tb")
+        .filter(
+            (F.col("_lr") > F.col("_cum") - F.col("_c"))
+            & (F.col("_lr") <= F.col("_cum"))
+        )
     )
     picked = j.groupBy("_g").agg(
         *[

@@ -60,6 +60,28 @@ def test_range_coarse_descent_no_cartesian(monkeypatch, idx_and_probes):
     assert "BroadcastHashJoin" in plan
 
 
+def test_descent_geometry_hoisted_off_pair_rows(monkeypatch, idx_and_probes):
+    """Every descent stage reads the hoisted per-cell (_blo, _bhi): no
+    broadcast join condition and no projection over the probe vector
+    re-derives a cell width (the POWER of the per-level slice count)."""
+    idx, probes = idx_and_probes
+    monkeypatch.setattr(GridIndex, "COARSE_THRESHOLD", 8)
+    monkeypatch.setattr(GridIndex, "COARSE_TARGET", 4)
+    monkeypatch.setattr(GridIndex, "DESCENT_BRANCH", 4)
+    assert len(idx._descent_ladder()) >= 2
+    for df in (
+        idx.knn(probes, 4, candidates="distributed"),
+        idx.range(probes, 0.1, candidates="distributed"),
+    ):
+        for line in _plan(df).splitlines():
+            per_pair = (
+                "BroadcastHashJoin" in line
+                or "BroadcastNestedLoopJoin" in line
+                or ("Project" in line and "_qvec" in line)
+            )
+            assert not (per_pair and "POWER(" in line), line[:400]
+
+
 def test_coarse_stats_single_shuffle(idx_and_probes):
     idx, _ = idx_and_probes
     plan = _plan(idx._coarse_stats(2))

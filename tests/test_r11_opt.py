@@ -9,6 +9,7 @@ bit-identical while removing measured overhead (OPTIMIZATION_r11.md).
   (ADVICE r10)
 - _scaled_state_parts session-cap guard (ADVICE r10)
 - GridIndex b0 broadcast plan-size gate (ADVICE r10)
+- GridIndex hoisted cell bounds equal the driver cell geometry bit for bit
 """
 from __future__ import annotations
 
@@ -116,6 +117,15 @@ class TestExactGroupQuantiles:
             [("A", 1.0), ("A", None), ("A", 2.0)], "g string, v double"
         )
         assert self._new(spark, df) == self._old(df)
+
+    def test_null_group_kept_like_percentile(self, spark):
+        """A NULL group key is a group of its own: the bucket join and the
+        target-bucket prefilter must both match it null-safely."""
+        rows = [(g, v) for g in ("a", None) for v in (10.0, 20.0, 30.0)]
+        df = spark.createDataFrame(rows, "g string, v double")
+        got = self._new(spark, df)
+        assert got == self._old(df)
+        assert got == {("a", 15.0, 20.0, 25.0), (None, 15.0, 20.0, 25.0)}
 
     def _old_form(self, spark):
         from pyvectorsearch_spark.queries.relational import _t
@@ -306,22 +316,37 @@ class TestEmbAutoDispatch:
         assert dec["kernel"] == "bucketed"
 
 
-class TestBoxCols:
-    def test_hoisted_bounds_identical(self, spark):
-        """r11: per-cell box bounds hoisted below the BroadcastExchange must
-        produce bit-identical (query, cell) survivor sets and distances."""
-        from pyvectorsearch_spark.index.grid import GridIndex
-        from pyvectorsearch_spark.queries.vector import QUERIES
+class TestHoistedBoxCols:
+    def test_box_cols_equal_cell_box_bitwise(self, spark):
+        """The hoisted per-cell bounds (_blo, _bhi), parsed from SQL text,
+        are the driver geometry ``_cell_box`` bit for bit at ratio 2 — on
+        the fine stats and on every coarse grouping the descent uses. A
+        literal parsed as DECIMAL instead of DOUBLE would show here."""
+        import numpy as np
 
-        prev = GridIndex.BOX_COLS
-        try:
-            GridIndex.BOX_COLS = True
-            new = {tuple(r) for r in QUERIES["knn_grid_query_table"](spark, SF_T2).collect()}
-            GridIndex.BOX_COLS = False
-            old = {tuple(r) for r in QUERIES["knn_grid_query_table"](spark, SF_T2).collect()}
-        finally:
-            GridIndex.BOX_COLS = prev
-        assert new == old and len(new) > 0
+        from pyvectorsearch_spark.index.grid import GridIndex
+        from pyvectorsearch_spark.sources.tables import load_table
+
+        emb = load_table(spark, SF_SMOKE, "embeddings").select(
+            "vec_id", F.slice("embedding", 1, 2).alias("p2")
+        )
+        idx = GridIndex.build(emb, vec_col="p2", id_col="vec_id", target_occupancy=8)
+        assert idx.ratio == 2
+        tables = [idx.stats_df] + [
+            idx._coarse_stats(lv) for lv in range(idx.fine_level)
+        ]
+        n_rows = 0
+        for t in tables:
+            for r in idx._with_box_cols(t).select(
+                "level", "coords", "_blo", "_bhi"
+            ).collect():
+                lo, hi = idx._cell_box(r["level"], tuple(r["coords"]))
+                blo = np.asarray(r["_blo"], dtype=np.float64)
+                bhi = np.asarray(r["_bhi"], dtype=np.float64)
+                assert blo.tobytes() == lo.tobytes(), (r["level"], r["coords"])
+                assert bhi.tobytes() == hi.tobytes(), (r["level"], r["coords"])
+                n_rows += 1
+        assert n_rows > len(idx.stats)
 
 
 class TestPooledPersistSamePlan:
